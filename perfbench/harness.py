@@ -386,7 +386,9 @@ class RunContext:
         conf = {
             "spark.sql.warehouse.dir": os.path.join(self.run_dir, "warehouse"),
             "spark.local.dir": self.tmp,
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={self.tmp}",
+            # -XX:-UsePerfData: the JVM would otherwise keep its counters
+            # in /tmp/hsperfdata_<user>, outside the run directory.
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={self.tmp} -XX:-UsePerfData",
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
         }

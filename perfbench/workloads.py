@@ -21,7 +21,7 @@ from datetime import datetime, timezone
 
 import datagen
 import oracle
-from harness import fold_event_log, fold_progress, gmean, timing
+from harness import fold_event_log, fold_progress, gmean, median, timing
 
 #: Scale factor of the registry tables per size profile.
 SF = {"full": 0.01, "tiny": 0.001}
@@ -49,18 +49,26 @@ WARMUP_THREADS = 4
 MIN_PASSES = 2
 
 #: bronze_ingest sizes: rows per payload file, files per micro-batch
-#: (``maxFilesPerTrigger``), backlog files.
+#: (``maxFilesPerTrigger``), backlog files per round.
 BRONZE_ROWS = {"full": 5_000, "tiny": 1_000}
 FILES_PER_TRIGGER = 4
-BRONZE_BACKLOG = {"full": 16, "tiny": 12}
-#: The paced tail's fixed open-loop rate, in payload files per second:
-#: about a quarter of the catch-up rate measured when the benchmark was
-#: defined (~18k rows/s on 4 cores), so a one-file tail micro-batch ends
-#: well before the next file is due. Recorded in BENCHMARK.json and never
-#: recomputed.
+BRONZE_BACKLOG = 12
+#: bronze_ingest replays the job lifecycle (restart, catch-up, paced tail,
+#: batch append) this many times and reports the mean round.
+ROUNDS = 4
+#: Warm-up micro-batches before the timed region: catch-up-sized ones,
+#: then one-file ones like the tail's. Until about ten micro-batches have
+#: run, each is slower than the last while the JVM compiles the decode,
+#: sink and commit paths, and how fast that goes depends on the host's
+#: load; timing only after them keeps that drift out of the measurements.
+WARMUP_CATCHUP_BATCHES = 2
+WARMUP_SINGLE_BATCHES = 4
+#: The paced tail's fixed open-loop rate, in payload files per second, for
+#: ``--seconds`` split over the rounds: about a quarter of the catch-up
+#: rate measured when the benchmark was defined (~18k rows/s on 4 cores),
+#: so a one-file tail micro-batch ends well before the next file is due.
+#: Recorded in BENCHMARK.json and never recomputed.
 TAIL_FILES_PER_S = 0.8
-#: Length of the paced tail, in multiples of ``--seconds``.
-TAIL_LENGTH = 1.0
 TOPIC, PARTITIONS = "orders", 3
 
 
@@ -422,10 +430,13 @@ def bronze_ingest(ctx):
     from pyspark.sql import functions as F
 
     rows = BRONZE_ROWS[ctx.size]
-    n_backlog = BRONZE_BACKLOG[ctx.size]
-    n_tail = max(3, round(TAIL_FILES_PER_S * ctx.seconds * TAIL_LENGTH))
-    files = datagen.order_payload_files(ctx.seed, 1 + n_backlog + n_tail, rows)
-    warm, backlog, tail = files[0], files[1 : 1 + n_backlog], files[1 + n_backlog :]
+    n_catchup = BRONZE_BACKLOG // FILES_PER_TRIGGER
+    n_tail = max(3, round(TAIL_FILES_PER_S * ctx.seconds / ROUNDS))
+    n_warm = WARMUP_CATCHUP_BATCHES * FILES_PER_TRIGGER + WARMUP_SINGLE_BATCHES
+    per_round = BRONZE_BACKLOG + n_tail
+    files = datagen.order_payload_files(ctx.seed, n_warm + ROUNDS * per_round, rows)
+    warm = files[:n_warm]
+    rounds = [files[n_warm + r * per_round : n_warm + (r + 1) * per_round] for r in range(ROUNDS)]
     src_dir = os.path.join(ctx.run_dir, "topic")
     ckpt = os.path.join(ctx.run_dir, "ckpt", "bronze_stream")
     shadow = ShadowKafka(os.path.join(ctx.run_dir, "ckpt", "shadow_kafka"), rows, ctx.seed)
@@ -466,70 +477,83 @@ def bronze_ingest(ctx):
             bronze.decode_events(raw, source_tag="kafka-batch"), "bronze_batch"
         )
 
-    # Warm-up: DDL, one streamed file and one batch-appended file compile
-    # the decode and sink code paths and create the stream's checkpoint.
+    # Warm-up: DDL, the warm files streamed in WARMUP_CATCHUP_BATCHES
+    # catch-up-sized micro-batches and then one file per micro-batch, and
+    # one batch append of them all. It creates the stream's checkpoint.
     with ctx.spans.span("warmup", op="warmup"):
         t0 = time.perf_counter()
         ctx.job_group("setup:bronze")
         bronze.create_bronze_table(spark, "bronze_stream")
         bronze.create_bronze_table(spark, "bronze_batch")
-        warm.write(src_dir, _file_time(0))
+        head = WARMUP_CATCHUP_BATCHES * FILES_PER_TRIGGER
+        warm_paths = [f.write(src_dir, _file_time(f.index)) for f in warm[:head]]
         q = start_stream()
-        q.processAllAvailable()
+        for f in warm[head:]:
+            _await_files(q, ckpt, [os.path.basename(p) for p in warm_paths], timeout=60)
+            warm_paths.append(f.write(src_dir, _file_time(f.index)))
+        _await_files(q, ckpt, [os.path.basename(p) for p in warm_paths], timeout=60)
         q.stop()
-        batch_append([os.path.join(src_dir, f"orders-{warm.index:05d}.parquet")])
+        batch_append(warm_paths)
         warm_s = time.perf_counter() - t0
     ctx.layers["warmup.first_exec_s"] = warm_s
     setup_s = base_setup_s + warm_s
-    _wait_for(lambda: 0 in shadow.ends, 10)
+    _wait_for(lambda: len(shadow.ends) >= 1 + _last_batch(ckpt), 10)
 
-    # The backlog that accumulated while the job was down.
-    backlog_paths = [f.write(src_dir, _file_time(i + 1)) for i, f in enumerate(backlog)]
-    n_catchup = n_backlog // FILES_PER_TRIGGER
-    shadow.plan_live(sorted(random.Random(ctx.seed).sample(range(2, n_catchup + 1), 2)))
-    shadow.expire_at_restart()
     ctx.progress.clear()
     ctx.job_group("timed:bronze")
     layers = ctx.layers
     py4j_before = ctx.py4j_calls
+    rng = random.Random(ctx.seed)
+    catchup_s, batch_s, freshness, late, due = [], [], [], [], []
+    ready = True
+    for r, chunk in enumerate(rounds):
+        backlog, tail = chunk[:BRONZE_BACKLOG], chunk[BRONZE_BACKLOG:]
+        # The backlog that accumulated while the job was down.
+        backlog_paths = [f.write(src_dir, _file_time(f.index)) for f in backlog]
+        first = 1 + _last_batch(ckpt)
+        last = first + n_catchup - 1
+        # The first catch-up batch already reads past the restart's expiry.
+        shadow.plan_live(rng.sample(range(first + 1, last + 1), 1))
+        shadow.expire_at_restart()
 
-    with ctx.spans.span("restart", op="restart"):
-        t_restart = time.perf_counter()
-        with ctx.spans.span("monitors.preflight"):
-            shadow.preflight()
-        with ctx.spans.span("bronze.stream_start"):
-            q = start_stream()
-    with ctx.spans.span("catchup", op="catchup"):
-        q.processAllAvailable()
-        catchup_s = time.perf_counter() - t_restart
+        with ctx.spans.span("restart", op=f"r{r}:restart"):
+            t0 = time.perf_counter()
+            with ctx.spans.span("monitors.preflight"):
+                shadow.preflight()
+            with ctx.spans.span("bronze.stream_start"):
+                q = start_stream()
+        with ctx.spans.span("catchup", op=f"r{r}:catchup"):
+            q.processAllAvailable()
+            catchup_s.append(time.perf_counter() - t0)
 
-    # Open-loop paced tail: file j is due at t0 + j / rate whatever the
-    # stream is doing; lateness of the generator is recorded.
-    due, late = [], []
-    with ctx.spans.span("tail", op="tail"):
-        t0_wall = time.time() + 0.2
-        for j, f in enumerate(tail):
-            when = t0_wall + j / TAIL_FILES_PER_S
-            time.sleep(max(0.0, when - time.time()))
-            late.append(max(0.0, time.time() - when))
-            f.write(src_dir, _file_time(1 + n_backlog + j))
-            due.append((f"orders-{f.index:05d}.parquet", when))
-        batch_of = _await_files(q, ckpt, [name for name, _ in due], timeout=60)
-    q.stop()
-    _wait_for(lambda: len(shadow.ends) >= 1 + _last_batch(ckpt), 10)
-    commit_at = {
-        b: os.stat(os.path.join(ckpt, "commits", str(b))).st_mtime
-        for b in set(batch_of.values())
-    }
-    freshness = [commit_at[batch_of[name]] - when for name, when in due]
+        # Open-loop paced tail: file j is due at t0 + j / rate whatever the
+        # stream is doing; lateness of the generator is recorded.
+        round_due = []
+        with ctx.spans.span("tail", op=f"r{r}:tail"):
+            t0_wall = time.time() + 0.2
+            for j, f in enumerate(tail):
+                when = t0_wall + j / TAIL_FILES_PER_S
+                time.sleep(max(0.0, when - time.time()))
+                late.append(max(0.0, time.time() - when))
+                f.write(src_dir, _file_time(f.index))
+                round_due.append((f"orders-{f.index:05d}.parquet", when))
+            batch_of = _await_files(q, ckpt, [name for name, _ in round_due], timeout=60)
+        q.stop()
+        _wait_for(lambda: len(shadow.ends) >= 1 + _last_batch(ckpt), 10)
+        commit_at = {
+            b: os.stat(os.path.join(ckpt, "commits", str(b))).st_mtime
+            for b in {batch_of[name] for name, _ in round_due}
+        }
+        freshness.append([commit_at[batch_of[name]] - when for name, when in round_due])
+        due += round_due
 
-    with ctx.spans.span("batch_append", op="batch_append"):
-        t0 = time.perf_counter()
-        with ctx.spans.span("monitors.guard"):
-            ready = shadow.guard(1, n_catchup)
-        with ctx.spans.span("bronze.batch_write"):
-            batch_append(backlog_paths)
-        batch_s = time.perf_counter() - t0
+        with ctx.spans.span("batch_append", op=f"r{r}:batch_append"):
+            t0 = time.perf_counter()
+            with ctx.spans.span("monitors.guard"):
+                ready = shadow.guard(first, last) and ready
+            with ctx.spans.span("bronze.batch_write"):
+                batch_append(backlog_paths)
+            batch_s.append(time.perf_counter() - t0)
     with ctx.spans.span("monitors.scan", op="scan"):
         shadow.scan(os.path.join(ctx.run_dir, "loss.log"))
 
@@ -549,7 +573,8 @@ def bronze_ingest(ctx):
         ).collect()[0]
         return r["n"], r["ids"], r["cents"]
 
-    for table, fs in (("bronze_stream", files), ("bronze_batch", [warm, *backlog])):
+    batch_files = [*warm, *(f for chunk in rounds for f in chunk[:BRONZE_BACKLOG])]
+    for table, fs in (("bronze_stream", files), ("bronze_batch", batch_files)):
         n, cents = ledger(fs)
         got = observed(table)
         ctx.attempted += 1
@@ -558,19 +583,24 @@ def bronze_ingest(ctx):
     ctx.attempted += 1
     ctx.check(recall == 1.0 and false_pos == 0 and ready,
               f"loss detection: recall {recall}, {false_pos} false positives")
-    ctx.attempted += len(freshness)
+    ctx.attempted += sum(len(f) for f in freshness)
 
-    backlog_rows = n_backlog * rows
+    # Every round counts: on a shared host a slow spell tends to last a
+    # whole run, so the fastest round moves with it about as much as the
+    # mean does, and the mean uses all the measured work.
+    backlog_rows = BRONZE_BACKLOG * rows
+    all_freshness = [x for fs in freshness for x in fs]
     end_to_end = {
         "setup_s": setup_s,
-        "op_gmean_ms": gmean(freshness) * 1e3,
-        "pass_s": catchup_s + batch_s,
+        "op_gmean_ms": gmean(all_freshness) * 1e3,
+        "pass_s": (sum(catchup_s) + sum(batch_s)) / ROUNDS,
     }
     details = {
-        "loop": f"open-loop paced tail at {TAIL_FILES_PER_S} files/s of {rows} rows",
-        "ingest_rows_per_s": backlog_rows / catchup_s,
-        "batch_ingest_rows_per_s": backlog_rows / batch_s,
-        "freshness_ms": timing([x * 1e3 for x in freshness], "ms"),
+        "loop": f"{ROUNDS} rounds; open-loop paced tail at {TAIL_FILES_PER_S} files/s of {rows} rows",
+        "ingest_rows_per_s": backlog_rows / median(catchup_s),
+        "batch_ingest_rows_per_s": backlog_rows / median(batch_s),
+        "freshness_ms": timing([x * 1e3 for x in all_freshness], "ms"),
+        "freshness_by_round_ms": [[round(x * 1e3, 1) for x in fs] for fs in freshness],
         "loadgen_late_ms": timing([x * 1e3 for x in late], "ms"),
         "catchup_s": catchup_s, "batch_s": batch_s,
         "loss_recall": recall, "false_positives": false_pos,
@@ -581,7 +611,7 @@ def bronze_ingest(ctx):
         stream_progress = [p for p in ctx.progress if p["name"] == "bronze_stream"]
         fold = _stream_layers(layers, stream_progress)
         bytes_written, files_written = _dir_size(os.path.join(ctx.run_dir, "warehouse"))
-        pending = _backlog_max(stream_progress, due, batch_of)
+        pending = _backlog_max(stream_progress, due, _file_batches(ckpt))
         layers.update({
             "bronze.addBatch_ms": fold["durationMs"]["addBatch"],
             "bronze.rows_per_batch": fold["rows"] / fold["batches"] if fold["batches"] else 0.0,
@@ -600,7 +630,7 @@ def bronze_ingest(ctx):
             "operators.build_s": ctx.spans.total("bronze.stream_start"),
             "driver.py4j_calls": py4j_calls,
         })
-        _exec_layers(ctx, layers, stream_progress, catchup_s + batch_s)
+        _exec_layers(ctx, layers, stream_progress, sum(catchup_s) + sum(batch_s))
     return end_to_end, details
 
 
