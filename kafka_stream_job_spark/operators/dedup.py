@@ -101,33 +101,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingle_array():
-    """Per-row array of word-level K-shingles (JVM-side, no explode)."""
-    toks = F.split(_norm_text(), " ")
-    n = F.size(toks)
-    # positions 0..n-K; each yields the K-token shingle joined by space.
-    idx = F.sequence(F.lit(0), F.greatest(n - SHINGLE_K, F.lit(0)))
-    shingle_at = lambda i: F.array_join(F.slice(toks, i + 1, SHINGLE_K), " ")  # noqa: E731
-    return F.transform(idx, shingle_at)
-
-
-def _hashed_shingle_expr():
-    """Array of 28-bit integer shingle hashes per row — shingling and
-    md5→int hashing fused in one ``transform`` so shingle strings never
-    materialize outside the expression (one md5 per shingle, total)."""
-    toks = F.split(_norm_text(), " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - SHINGLE_K, F.lit(0)))
-    return F.transform(
-        idx,
-        lambda i: F.conv(
-            F.substring(F.md5(F.array_join(F.slice(toks, i + 1, SHINGLE_K), " ")), 1, 7),
-            16,
-            10,
-        ).cast("long"),
-    )
-
-
 def _py_norm_shingles(text: str, ws) -> list:
     """Python twin of ``transform(sequence(...), i -> array_join(slice(
     toks, i+1, K), ' '))`` over the normalized text — ALL positions
@@ -141,6 +114,18 @@ def _py_norm_shingles(text: str, ws) -> list:
     if m < 0:
         m = 0
     return [" ".join(toks[i : i + SHINGLE_K]) for i in range(m + 1)]
+
+
+def _docs_with_text(batch) -> list:
+    """(doc_id, text) pairs of an Arrow batch without its NULL-text rows,
+    mirroring explode(NULL) dropping the row in the JVM twins."""
+    return [
+        (did, text)
+        for did, text in zip(
+            batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
+        )
+        if text is not None
+    ]
 
 
 def _minhash_sig_batches(it):
@@ -176,10 +161,10 @@ def _minhash_sig_batches(it):
     A = np.array(MINHASH_A, dtype=np.int64)[:, None]
     B = np.array(MINHASH_B, dtype=np.int64)[:, None]
     for batch in it:
-        ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
+        docs = _docs_with_text(batch)
+        ids = [did for did, _ in docs]
         sigs = np.empty((len(ids), NUM_HASHES), dtype=np.int64)
-        for r, text in enumerate(texts):
+        for r, (_, text) in enumerate(docs):
             grams = _py_norm_shingles(text, ws)
             h = np.fromiter(
                 (
@@ -281,10 +266,10 @@ def _simhash_fp_batches(it):
     md5 = hashlib.md5
     bits = np.arange(SIMHASH_BITS, dtype=np.int64)
     for batch in it:
-        ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
+        docs = _docs_with_text(batch)
+        ids = [did for did, _ in docs]
         fps = np.empty(len(ids), dtype=np.int64)
-        for r, text in enumerate(texts):
+        for r, (_, text) in enumerate(docs):
             hs = {
                 int(md5(g.encode("utf-8")).hexdigest()[:7], 16)
                 for g in _py_norm_shingles(text, ws)

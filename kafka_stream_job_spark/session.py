@@ -51,6 +51,25 @@ ENGINE_DEFAULTS: dict[str, str] = {
     # Spark 4 rejects outright; read nanos as long and convert in the
     # loader (tables.load_table) — same µs truncation DuckDB applies.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Streaming checkpoint I/O (offsets/, commits/, file-source and
+    # file-sink logs, state-store deltas) through Hadoop FileSystem
+    # instead of Spark's FileContext default. Without libhadoop
+    # (NativeCodeLoader.isNativeCodeLoaded() is false in every pip
+    # PySpark), each FileContext rename goes through
+    # RawLocalFs.getFileLinkStatus, which forks a `readlink` for the file
+    # and again for its .crc twin: ~32 readlink forks per one-file bronze
+    # micro-batch, ~175 per streaming_dedup_events drain. Safe because
+    # this manager keeps the same temp-file-then-rename protocol and file
+    # layout (.crc files included); on local disk it is as atomic as the
+    # FileContext path (both check the target is absent, then rename) and
+    # HDFS rename refuses to overwrite; Spark's state checksum wrapper
+    # (spark.sql.streaming.checkpoint.fileChecksum.enabled) still wraps
+    # it. Override per deployment (e.g. an object-store manager) through
+    # a properties file or extra_conf.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
     # The driver compares against DuckDB; ANSI stays on (Spark 4 default)
     # so overflow/casts fail loudly instead of silently diverging.
 }

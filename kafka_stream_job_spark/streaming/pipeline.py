@@ -26,6 +26,8 @@ scheduling.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -452,6 +454,43 @@ class _drain_partitions:
         return False
 
 
+#: Drain progress shares the data-loss monitors' logger, so loss events and
+#: drain records land in one sink.
+_progress_log = logging.getLogger("kafka_stream_job_spark.monitors")
+
+
+def _log_drain_progress(query) -> None:
+    """Fold a stopped drain's ``recentProgress`` into one JSON record and
+    log it at INFO: query name, executed batches, summed ``numInputRows``,
+    summed ``durationMs`` phases, and per state operator its final
+    ``numRowsTotal`` and summed ``commitTimeMs``. Built only when the
+    logger is enabled for INFO, so the default path does no work. Spark
+    keeps the last ``spark.sql.streaming.numRecentProgressUpdates`` (100)
+    updates; a longer drain's record covers only those."""
+    if not _progress_log.isEnabledFor(logging.INFO):
+        return
+    progress = query.recentProgress
+    duration: dict[str, int] = {}
+    state: list[dict] = []
+    for p in progress:
+        for phase, ms in p.durationMs.items():
+            duration[phase] = duration.get(phase, 0) + ms
+        for i, op in enumerate(p.stateOperators):
+            if i == len(state):
+                state.append({"operatorName": op.operatorName, "commitTimeMs": 0})
+            state[i]["numRowsTotal"] = op.numRowsTotal
+            state[i]["commitTimeMs"] += op.commitTimeMs
+    record = {
+        "event": "stream_drain",
+        "query": query.name or str(query.id),
+        "batches": sum("addBatch" in p.durationMs for p in progress),
+        "numInputRows": sum(p.numInputRows for p in progress),
+        "durationMs": duration,
+        "stateOperators": state,
+    }
+    _progress_log.info(json.dumps(record, sort_keys=True))
+
+
 def run_stream_foreach_batch(
     spark: SparkSession, df: DataFrame, output_dir: str, checkpoint_dir: str
 ) -> DataFrame:
@@ -467,6 +506,7 @@ def run_stream_foreach_batch(
             query.processAllAvailable()
         finally:
             query.stop()
+        _log_drain_progress(query)
     return spark.read.parquet(output_dir)
 
 
@@ -496,9 +536,9 @@ def run_stream_to_memory(
         )
         try:
             query.processAllAvailable()  # Q1 drain barrier
-            _ = query.lastProgress  # Q2 progress introspection
         finally:
             query.stop()  # bounded test; production uses awaitTermination (Q4)
+        _log_drain_progress(query)  # Q2 progress introspection
     return spark.table(name)
 
 

@@ -6,6 +6,7 @@ speed and run sf0.01 in the oracle test module)."""
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -103,3 +104,33 @@ def assert_matches_oracle(spark, sf_dir: str, spark_df, oracle_sql: str, name: s
     assert s_set == o_set, (
         f"{name}: value mismatch; first diffs: {mismatches[:3]}"
     )
+
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_SYSTEM_MANAGER = f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+#: Spark's own default, used when the conf is unset.
+FILE_CONTEXT_MANAGER = f"{_CHECKPOINTING}.FileContextBasedCheckpointFileManager"
+
+
+def checkpoint_manager_class(spark, path: str) -> str:
+    """Class of the manager Spark resolves for a checkpoint at ``path``
+    (``CheckpointFileManager.create`` over the session's Hadoop conf)."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getName()
+
+
+@contextmanager
+def checkpoint_manager(spark, cls: str):
+    """Run streaming queries started inside the block under manager ``cls``,
+    restoring the session's value afterward."""
+    saved = spark.conf.get(CHECKPOINT_MANAGER_KEY)
+    spark.conf.set(CHECKPOINT_MANAGER_KEY, cls)
+    try:
+        yield
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, saved)

@@ -29,9 +29,9 @@ _ORDERS = [
 ]
 
 
-def _json_raw(spark):
+def _json_raw(spark, orders=_ORDERS):
     """Kafka-shaped frame: one binary `value` column of JSON payloads."""
-    df = spark.createDataFrame(_ORDERS, ["orderId", "amount", "ts"])
+    df = spark.createDataFrame(orders, ["orderId", "amount", "ts"])
     return df.select(
         F.encode(F.to_json(F.struct("orderId", "amount", "ts")), "UTF-8").alias(
             "value"
@@ -78,6 +78,39 @@ def test_bronze_stream_append_exactly_once(spark, tmp_path):
         q.processAllAvailable()
         q.stop()
     assert spark.table(table).count() == len(_ORDERS)
+    spark.sql(f"DROP TABLE {table}")
+
+
+def test_bronze_checkpoint_from_filecontext_manager_resumes(spark, tmp_path):
+    """A bronze checkpoint written under Spark's FileContext checkpoint
+    manager (its own default) resumes under the engine's FileSystem-based
+    default: after one more payload file lands, the table holds every
+    order exactly once."""
+    from .conftest import FILE_CONTEXT_MANAGER, checkpoint_manager
+
+    table = "bronze_orders_ckpt_resume"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    create_bronze_table(spark, table, provider="parquet")
+
+    src_dir = str(tmp_path / "raw")
+    _json_raw(spark).write.parquet(src_dir)
+    raw_stream = spark.readStream.schema("value binary").parquet(src_dir)
+    decoded = decode_events(raw_stream, source_tag="kafka-stream")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        q = write_stream_append(decoded, table, ckpt)
+        q.processAllAvailable()
+        q.stop()
+
+    with checkpoint_manager(spark, FILE_CONTEXT_MANAGER):
+        drain()
+    more = [("o-4", 7.0, "2024-01-01T00:03:00Z")]
+    _json_raw(spark, more).write.mode("append").parquet(src_dir)
+    drain()
+
+    got = sorted(r["orderId"] for r in spark.table(table).collect())
+    assert got == ["o-1", "o-2", "o-3", "o-4"]
     spark.sql(f"DROP TABLE {table}")
 
 

@@ -5315,6 +5315,51 @@ def test_anchored_grams_match_jvm_norm_on_unicode_edges(spark):
 # tokens), empty-after-collapse docs, repeated shingles, plus real
 # fixture docs so token statistics are representative.
 # ---------------------------------------------------------------------------
+def _jvm_shingles(shingle_at):
+    """``transform(sequence(0, max(n-K, 0)), i -> shingle_at(toks, i))``
+    over the normalized text: the JVM expression shape the Arrow shingle
+    bodies replaced, kept here as their bit-equality reference. NULL text
+    gives a NULL array, so explode drops the row, as the Arrow bodies and
+    DuckDB's unnest(string_split(NULL)) do. Without the guard, greatest()
+    would skip the NULL size and yield one NULL shingle."""
+    from pyspark.sql import functions as F
+
+    from kafka_stream_job_spark.operators.dedup import SHINGLE_K, _norm_text
+
+    toks = F.split(_norm_text(), " ")
+    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - SHINGLE_K, F.lit(0)))
+    return F.when(
+        F.col("text").isNotNull(), F.transform(idx, lambda i: shingle_at(toks, i))
+    )
+
+
+def _shingle_array():
+    """Per-row array of word-level K-shingles (JVM-side, no explode)."""
+    from pyspark.sql import functions as F
+
+    from kafka_stream_job_spark.operators.dedup import SHINGLE_K
+
+    return _jvm_shingles(
+        lambda toks, i: F.array_join(F.slice(toks, i + 1, SHINGLE_K), " ")
+    )
+
+
+def _hashed_shingle_expr():
+    """Array of 28-bit integer shingle hashes per row: the leading 7 hex
+    digits of each shingle's md5."""
+    from pyspark.sql import functions as F
+
+    from kafka_stream_job_spark.operators.dedup import SHINGLE_K
+
+    return _jvm_shingles(
+        lambda toks, i: F.conv(
+            F.substring(F.md5(F.array_join(F.slice(toks, i + 1, SHINGLE_K), " ")), 1, 7),
+            16,
+            10,
+        ).cast("long")
+    )
+
+
 def _shingle_test_docs(spark):
     from tests.conftest import SF_SMOKE
 
@@ -5327,6 +5372,7 @@ def _shingle_test_docs(spark):
         (900004, " \t "),
         (900005, "a b c a b c a b c"),
         (900006, "x   y z w"),
+        (900007, None),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     real = (
@@ -5346,10 +5392,9 @@ def test_minhash_arrow_sigs_match_jvm(spark):
         MINHASH_P,
         NUM_HASHES,
         _minhash_sig_batches,
-        _shingle_array,
     )
 
-    df = _shingle_test_docs(spark).where(F.col("text").isNotNull())
+    df = _shingle_test_docs(spark)
     got = {
         r["doc_id"]: tuple(r[f"h{s}"] for s in range(NUM_HASHES))
         for r in df.mapInArrow(
@@ -5382,10 +5427,7 @@ def test_minhash_arrow_sigs_match_jvm(spark):
 def test_shingle_rows_arrow_match_jvm(spark):
     from pyspark.sql import functions as F
 
-    from kafka_stream_job_spark.operators.dedup import (
-        _shingle_array,
-        _shingle_rows_batches,
-    )
+    from kafka_stream_job_spark.operators.dedup import _shingle_rows_batches
 
     df = _shingle_test_docs(spark)
     got_rows = df.select("doc_id", "text").mapInArrow(
@@ -5410,11 +5452,10 @@ def test_simhash_arrow_fp_match_jvm(spark):
 
     from kafka_stream_job_spark.operators.dedup import (
         SIMHASH_BITS,
-        _hashed_shingle_expr,
         _simhash_fp_batches,
     )
 
-    df = _shingle_test_docs(spark).where(F.col("text").isNotNull())
+    df = _shingle_test_docs(spark)
     got = {
         r["doc_id"]: r["fp"]
         for r in df.select("doc_id", "text")

@@ -1014,3 +1014,129 @@ def test_self_excitation_fold_is_arrow_chunk_order_independent(spark):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+# ---------------------------------------------------------------------------
+# Checkpoint I/O goes through Spark's FileSystem-based manager by default
+# (session.ENGINE_DEFAULTS): same files, same protocol, no readlink fork
+# per rename.
+# ---------------------------------------------------------------------------
+def _drain_dedup_events(spark, monkeypatch, ckpt):
+    """Run the registered streaming_dedup_events drain with its checkpoint
+    at ``ckpt``; returns the drained table."""
+    import tempfile
+
+    from kafka_stream_job_spark.registry import all_specs
+
+    mkdtemp = tempfile.mkdtemp
+
+    def ckpt_dir(*args, prefix=None, **kwargs):
+        if prefix == "ksj-stream-dedup-":
+            ckpt.mkdir()
+            return str(ckpt)
+        return mkdtemp(*args, prefix=prefix, **kwargs)
+
+    monkeypatch.setattr(tempfile, "mkdtemp", ckpt_dir)
+    return all_specs()["streaming_dedup_events"].fn(spark, SF_SMOKE)
+
+
+def _files_under(root) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_checkpoint_manager_default_is_filesystem_based(spark, tmp_path):
+    from .conftest import FILE_SYSTEM_MANAGER, checkpoint_manager_class
+
+    assert (
+        checkpoint_manager_class(spark, f"file:{tmp_path}") == FILE_SYSTEM_MANAGER
+    )
+
+
+def test_dedup_drain_checkpoint_layout(spark, tmp_path, monkeypatch):
+    """A drained streaming_dedup_events checkpoint holds the WAL, source
+    log and per-partition state deltas with their Hadoop .crc twins and
+    Spark's state checksum files, leaves no temp files, and has exactly
+    the layout the FileContext manager writes."""
+    from kafka_stream_job_spark.streaming.pipeline import DRAIN_SHUFFLE_PARTITIONS
+
+    from .conftest import (
+        FILE_CONTEXT_MANAGER,
+        checkpoint_manager,
+        checkpoint_manager_class,
+    )
+
+    _drain_dedup_events(spark, monkeypatch, tmp_path / "fs").count()
+    files = _files_under(tmp_path / "fs")
+    expected = set()
+    for f in ("metadata", "offsets/0", "commits/0", "sources/0/0"):
+        head, _, name = f.rpartition("/")
+        expected |= {f, os.path.join(head, f".{name}.crc")}
+    for p in range(DRAIN_SHUFFLE_PARTITIONS):
+        d = f"state/0/{p}"
+        expected |= {
+            f"{d}/1.delta",
+            f"{d}/.1.delta.crc",
+            f"{d}/1.delta.crc",  # Spark's state checksum file
+            f"{d}/.1.delta.crc.crc",
+        }
+    assert expected <= files, sorted(expected - files)
+    assert not [f for f in files if "tmp" in f.lower()]
+
+    with checkpoint_manager(spark, FILE_CONTEXT_MANAGER):
+        assert (
+            checkpoint_manager_class(spark, f"file:{tmp_path}")
+            == FILE_CONTEXT_MANAGER
+        )
+        _drain_dedup_events(spark, monkeypatch, tmp_path / "fc").count()
+    assert _files_under(tmp_path / "fc") == files
+
+
+def test_drain_logs_one_progress_record(spark, caplog, monkeypatch, tmp_path):
+    """The drain's recentProgress is folded into one JSON record on the
+    monitors logger; its summed numInputRows is the events row count and
+    its dedup state holds one row per drained key."""
+    import json
+    import logging
+
+    caplog.set_level(logging.INFO, logger="kafka_stream_job_spark.monitors")
+    out = _drain_dedup_events(spark, monkeypatch, tmp_path / "ckpt")
+    records = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == "kafka_stream_job_spark.monitors"
+        and '"stream_drain"' in r.getMessage()
+    ]
+    assert len(records) == 1
+    rec = records[0]
+    assert rec["query"].startswith("stream_dedup_")
+    assert rec["batches"] >= 1
+    assert rec["numInputRows"] == load_table(spark, SF_SMOKE, "events").count()
+    assert rec["durationMs"]["addBatch"] > 0
+    [state] = rec["stateOperators"]
+    assert state["numRowsTotal"] == out.count()
+    assert state["commitTimeMs"] >= 0
+
+
+def test_drain_progress_untouched_when_info_disabled():
+    """With the monitors logger above INFO the record is not built: the
+    query's progress is never read."""
+    import logging
+
+    from kafka_stream_job_spark.streaming.pipeline import _log_drain_progress
+
+    class Query:
+        @property
+        def recentProgress(self):
+            raise AssertionError("progress read with INFO disabled")
+
+    log = logging.getLogger("kafka_stream_job_spark.monitors")
+    saved = log.level
+    log.setLevel(logging.WARNING)
+    try:
+        _log_drain_progress(Query())
+    finally:
+        log.setLevel(saved)

@@ -2,6 +2,10 @@
 (one warmup pass, min of two timed passes, count() action) without
 running the whole bench — for iterating on one operator.
 
+Specs tagged ``streaming`` are marked in the output: each timed call of
+one re-runs a whole drain (new checkpoint, new memory table), so its
+min-of-two time is not a re-run of cached work.
+
 Usage::
 
     python tools/time_queries.py <query> [query ...]
@@ -42,7 +46,8 @@ def main() -> int:
             t0 = time.perf_counter()
             spec.fn(spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)
-        print(f"{n}: {best:.3f}s")
+        mark = "  [streaming: full drain per call]" if "streaming" in spec.tags else ""
+        print(f"{n}: {best:.3f}s{mark}")
     spark.stop()
     return 0
 
